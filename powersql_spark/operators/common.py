@@ -63,6 +63,8 @@ def dsum_grid(col: str | Column, alias: str) -> Column:
     value-headroom of dsum's decimal(28,6), so overflow behaviour at
     100 TB is unchanged. Use ONLY with a per-site grid proof (see
     :func:`_grid_unscaled`); arbitrary doubles must keep dsum."""
+    # Proof: tests/test_semantics.py::test_dsum_grid_identical_to_dsum —
+    # extend it for every newly converted expression family.
     c = F.col(col) if isinstance(col, str) else col
     return _grid_back(F.sum(_grid_unscaled(c))).alias(alias)
 

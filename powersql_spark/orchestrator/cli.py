@@ -4,6 +4,11 @@ Mirrors the reference's structopt commands (src/main.rs:30-50): check,
 run, test (--fail-fast), docs. Extras: --sources to register external
 parquet tables (SURVEY.md §7 decision 2) and --parallel for concurrent
 model materialization.
+
+``test`` evaluates the ASSERTs concurrently and prints them in
+declaration order; one whose SQL fails prints ERROR (its first error
+line goes to stderr) and the exit code is 1. A TABLE model's read-back
+after ``run`` reuses the schema it was written with.
 """
 
 from __future__ import annotations

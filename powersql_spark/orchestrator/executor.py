@@ -9,7 +9,9 @@ Materialization semantics:
 - view / materialized view -> CREATE OR REPLACE TEMP VIEW (the
   reference treats MV identically to VIEW, src/main.rs:153).
 - table -> eager parquet write under <project>/target/<name> +
-  re-registered as a temp view. mode("overwrite") gives the reference's
+  re-registered as a temp view over the written files, read with the
+  schema of the DataFrame just written, so the read-back launches no
+  schema-inference job. mode("overwrite") gives the reference's
   DROP-and-recreate idempotence (src/execute.rs:77-111); the topo run
   loop rebuilds downstream models, which is what DROP ... CASCADE
   achieved (SURVEY.md §7 decision 4).
@@ -43,8 +45,11 @@ class SparkExecutor:
             )
         elif model.kind == "table":
             path = os.path.join(self.target_dir, model.name)
-            self.spark.sql(model.query).write.mode("overwrite").parquet(path)
-            self.spark.read.parquet(path).createOrReplaceTempView(model.name)
+            df = self.spark.sql(model.query)
+            df.write.mode("overwrite").parquet(path)
+            self.spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(
+                model.name
+            )
         else:  # pragma: no cover
             raise ValueError(f"unknown model kind: {model.kind}")
 

@@ -7,15 +7,24 @@ models concurrently from a thread pool — Spark job submission is
 thread-safe and independent models shuffle/scan concurrently, which is
 the free orchestration-level win the reference leaves on the table
 (SURVEY.md §7 decision 6). Serial remains the default, faithful mode.
+
+``test`` evaluates its ASSERTs concurrently from the same kind of pool
+and prints OK/ERROR in declaration order, and restoring a session's
+TABLE models reads their parquet targets concurrently. A TABLE model's
+read-back after ``run`` writes it reuses the written schema, so it
+launches no schema-inference job.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 from powersql_spark.catalog import load_tables
@@ -261,14 +270,7 @@ def run(
         needed: set[str] = set()
         for name in order:
             needed |= _ancestor_closure(project.deps, name)
-        for name in project.order:
-            if name in needed and name not in keep:
-                m = project.models[name]
-                path = os.path.join(ex.target_dir, m.name)
-                if m.kind == "table" and os.path.isdir(path):
-                    spark.read.parquet(path).createOrReplaceTempView(m.name)
-                else:
-                    ex.execute(m)
+        _restore_models(spark, project, ex, needed - keep)
     if not parallel:
         for name in order:
             ex.execute(project.models[name])
@@ -312,27 +314,34 @@ def run(
 
 
 def _restore_models(
-    spark: SparkSession, project: Project, ex: SparkExecutor
+    spark: SparkSession,
+    project: Project,
+    ex: SparkExecutor,
+    names: set[str] | None = None,
 ) -> None:
-    """Re-register models in a fresh session.
+    """Re-register models (all of them, or only ``names``) in a fresh
+    session.
 
     The reference's backend is a persistent warehouse, so `test` sees
     what `run` built; Spark temp views are session-scoped. Views are
     lazy — re-creating them is free; TABLE models load from the parquet
     target written by `run` (falling back to materializing if absent).
+    Each parquet read infers its schema with one Spark job, so the
+    targets are read concurrently first; the views are then registered
+    in topological order, since a view resolves against its parents.
     """
-    import os
-
-    for name in project.order:
-        model = project.models[name]
-        if model.kind == "table":
-            path = os.path.join(ex.target_dir, model.name)
-            if os.path.isdir(path):
-                spark.read.parquet(path).createOrReplaceTempView(model.name)
-            else:
-                ex.execute(model)
+    order = [n for n in project.order if names is None or n in names]
+    reads = {}
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        for name in order:
+            path = os.path.join(ex.target_dir, name)
+            if project.models[name].kind == "table" and os.path.isdir(path):
+                reads[name] = pool.submit(spark.read.parquet, path)
+    for name in order:
+        if name in reads:
+            reads[name].result().createOrReplaceTempView(name)
         else:
-            ex.execute(model)
+            ex.execute(project.models[name])
 
 
 def test(
@@ -342,21 +351,38 @@ def test(
     fail_fast: bool = False,
 ) -> int:
     """Run ASSERT data tests; returns the exit code (0 ok, 1 failures),
-    printing OK/ERROR per test (src/main.rs:430-454)."""
+    printing OK/ERROR per test (src/main.rs:430-454).
+
+    The ASSERTs are independent read-only queries, so they are submitted
+    to a thread pool together and their results printed in declaration
+    order. An ASSERT whose SQL fails to analyze or execute prints ERROR,
+    with the exception's first line on stderr, and the others still
+    report. ``fail_fast`` stops the output at the first failing test in
+    declaration order and cancels the ones not yet started."""
     project = load_project(project_dir)
     _register_sources(spark, sources, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
     _restore_models(spark, project, ex)
     exit_code = 0
-    for t in project.tests:
-        ok = ex.query_bool(t.condition)
-        if ok:
-            print(f"{t.message}...OK")
-        else:
-            print(f"{t.message}...ERROR")
-            exit_code = 1
-            if fail_fast:
-                return 1
+    pool = ThreadPoolExecutor(max_workers=8)
+    try:
+        futures = [pool.submit(ex.query_bool, t.condition) for t in project.tests]
+        for t, fut in zip(project.tests, futures):
+            try:
+                ok = fut.result()
+            except (PySparkException, Py4JJavaError) as e:
+                first = str(e).strip().partition("\n")[0]
+                print(f"error: {t.message}: {first}", file=sys.stderr)
+                ok = False
+            if ok:
+                print(f"{t.message}...OK")
+            else:
+                print(f"{t.message}...ERROR")
+                exit_code = 1
+                if fail_fast:
+                    break
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
     return exit_code
 
 

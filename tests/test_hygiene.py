@@ -41,6 +41,10 @@ def test_local_dirs_respects_shm_free_space(monkeypatch):
     from powersql_spark import session as s
 
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR", raising=False)
+    # Hermetic: pretend /dev/shm exists and is writable, so the verdict
+    # depends only on the faked free space, not on this host's mounts.
+    monkeypatch.setattr(os.path, "isdir", lambda p: True)
+    monkeypatch.setattr(os, "access", lambda p, mode: True)
 
     class Tiny:
         f_bavail = 1024

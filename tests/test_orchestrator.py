@@ -540,3 +540,141 @@ def test_wide_example_runs_parallel_and_serial(spark):
     assert len(serial) == 9
     assert serial[-1] == "summary" == parallel[-1]
     assert n_serial == n_parallel
+
+
+# ---------- concurrent ASSERTs, restores and TABLE read-back ----------
+
+
+def _write_test_project(tmp_path, asserts):
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "asserts"\nmodels = ["models"]\ntests = ["tests"]\n'
+    )
+    (tmp_path / "models").mkdir()
+    (tmp_path / "models" / "m.sql").write_text(
+        "CREATE VIEW items AS SELECT l_orderkey, l_quantity FROM lineitem;\n"
+        "CREATE TABLE items_t AS SELECT l_orderkey, l_quantity FROM items"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "t.sql").write_text(
+        "\n".join(f"ASSERT {cond} AS '{msg}';" for msg, cond in asserts)
+    )
+
+
+def test_assert_output_keeps_declaration_order(spark, tmp_path, capsys):
+    """ASSERTs run concurrently, but their lines print in declaration
+    order. The declared order is a shuffle mixing slow and fast queries
+    and passing and failing ones, so completion order differs from it."""
+    import random
+
+    from powersql_spark.orchestrator.runner import test as run_tests
+
+    asserts = []
+    for k in range(12):
+        if k % 3 == 0:  # slow: a join over lineitem
+            cond = (
+                f"(SELECT COUNT(*) FROM items a JOIN items_t b"
+                f" ON a.l_orderkey = b.l_orderkey) {'>=' if k % 2 else '<'} 0"
+            )
+        else:
+            cond = f"{k} {'>' if k % 4 else '<'} 0"
+        asserts.append((f"t{k}", cond))
+    random.Random(7).shuffle(asserts)
+    _write_test_project(tmp_path, asserts)
+
+    rc = run_tests(spark, tmp_path, sources=SOURCES)
+    lines = capsys.readouterr().out.splitlines()
+    expected = [
+        f"{msg}...{'OK' if spark.sql(f'SELECT {cond}').first()[0] else 'ERROR'}"
+        for msg, cond in asserts
+    ]
+    assert lines == expected
+    assert any(x.endswith("OK") for x in lines)
+    assert rc == 1 and any(x.endswith("ERROR") for x in lines)
+
+
+def test_assert_sql_error_reported_not_raised(spark, tmp_path, capsys):
+    """An ASSERT whose SQL fails, at analysis (an unknown column) or in a
+    task (assert_true), prints ERROR with its first error line on stderr;
+    every other test still reports, and the exit code is 1. Under
+    fail_fast the output stops at the first of them."""
+    from powersql_spark.orchestrator.runner import test as run_tests
+
+    _write_test_project(
+        tmp_path,
+        [
+            ("first ok", "(SELECT COUNT(*) FROM items_t) > 0"),
+            ("bad sql", "(SELECT MAX(no_such_col) FROM items) > 0"),
+            ("task fails", "(SELECT COUNT(assert_true(l_quantity < 0)) FROM items) > 0"),
+            ("last ok", "(SELECT COUNT(*) FROM items) > 0"),
+        ],
+    )
+    rc = run_tests(spark, tmp_path, sources=SOURCES)
+    captured = capsys.readouterr()
+    assert rc == 1
+    assert captured.out.splitlines() == [
+        "first ok...OK",
+        "bad sql...ERROR",
+        "task fails...ERROR",
+        "last ok...OK",
+    ]
+    err = [x for x in captured.err.splitlines() if x.startswith("error: ")]
+    assert len(err) == 2
+    assert "bad sql" in err[0] and "no_such_col" in err[0]
+    assert "task fails" in err[1]
+
+    rc = run_tests(spark, tmp_path, sources=SOURCES, fail_fast=True)
+    assert rc == 1
+    assert capsys.readouterr().out.splitlines() == ["first ok...OK", "bad sql...ERROR"]
+
+
+def test_table_read_back_schema_matches_inferred(spark, tmp_path):
+    """A TABLE model is re-registered over its parquet target with the
+    schema it was written with, not an inferred one; that schema must be
+    exactly what parquet inference gives for the written files."""
+    from powersql_spark.orchestrator.runner import run
+
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "types"\nmodels = ["models"]\n'
+    )
+    (tmp_path / "models").mkdir()
+    (tmp_path / "models" / "m.sql").write_text(
+        "CREATE TABLE typed AS SELECT"
+        " CAST(l_extendedprice AS DECIMAL(12, 2)) AS dec,"
+        " l_orderkey AS k,"
+        " 1 AS non_null_int,"
+        " DATE'2024-01-02' AS d,"
+        " TIMESTAMP'2024-01-02 03:04:05' AS ts,"
+        " TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts_ntz,"
+        " array(l_linenumber, l_linenumber + 1) AS arr,"
+        " named_struct('q', l_quantity, 'flag', l_returnflag) AS st,"
+        " map(l_returnflag, l_tax) AS m,"
+        " CAST(NULL AS STRING) AS null_str,"
+        " CAST(NULL AS DECIMAL(10, 3)) AS null_dec,"
+        " CAST(NULL AS ARRAY<TIMESTAMP>) AS null_arr"
+        " FROM lineitem;\n"
+        "CREATE TABLE typed_empty AS SELECT * FROM typed WHERE k < 0"
+    )
+    run(spark, tmp_path, sources=SOURCES)
+    for name in ("typed", "typed_empty"):
+        registered = spark.table(name).schema
+        inferred = spark.read.parquet(str(tmp_path / "target" / name)).schema
+        assert registered == inferred, name
+    assert spark.table("typed").count() > 0
+    assert spark.table("typed_empty").count() == 0
+
+
+def test_run_job_count_upper_bound(spark):
+    """Deterministic gate on `run` over examples/project: its one TABLE
+    model costs the jobs of its write and none for the read-back (which
+    used to launch a schema-inference job: 3 jobs a warm run, now 2)."""
+    from powersql_spark.orchestrator.runner import run
+
+    sc = spark.sparkContext
+
+    def last_job() -> int:
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    run(spark, PROJECT, sources=SOURCES)  # registers sources, warms up
+    before = last_job()
+    run(spark, PROJECT, sources=SOURCES)
+    assert last_job() - before <= 2
